@@ -77,8 +77,12 @@ class Catalog(dir: String) {
     all.map(_.tableRef).distinct.map(latest)
   }
 
-  def lookup(tableRef: String): Option[CatalogEntry] =
-    entries.reverse.find(_.tableRef == tableRef)
+  /** Latest entry: parses newest-first, only lines quoting the name as Jackson writes it. */
+  def lookup(tableRef: String): Option[CatalogEntry] = {
+    val quoted = mapper.writeValueAsString(tableRef)
+    synchronized(readLines(catalogFile)).reverseIterator.filter(_.contains(quoted))
+      .map(mapper.readValue(_, classOf[CatalogEntry])).find(_.tableRef == tableRef)
+  }
 
   def register(
       tableRef: String,
@@ -90,7 +94,7 @@ class Catalog(dir: String) {
       sortBy: Option[String] = None,
       numBuckets: Option[Int] = None,
       generation: Option[String] = None): CatalogEntry = synchronized {
-    val e = CatalogEntry(entries.size + 1L, tableRef, tablePath, schema, comment, entryType,
+    val e = CatalogEntry(readLines(catalogFile).size + 1L, tableRef, tablePath, schema, comment, entryType,
       bucketBy, sortBy, numBuckets, generation)
     appendLine(catalogFile, mapper.writeValueAsString(e))
     e

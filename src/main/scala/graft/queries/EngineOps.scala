@@ -164,7 +164,7 @@ object EngineOps {
 
   /** XLSX writer → distributed XLSX reader, two workbook shards read
     * through a direct-path glob (`'…/part_*.xlsx'`), exercising the
-    * `binaryFiles`-per-workbook scale path (reference: excel.rs merges
+    * one-task-per-workbook scale path (reference: excel.rs merges
     * files on one thread; here each file is an executor task).
     */
   def fmt_xlsx_roundtrip(spark: SparkSession, dir: String): DataFrame = {

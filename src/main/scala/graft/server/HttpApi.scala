@@ -176,13 +176,16 @@ class HttpApi(engine: Engine, port: Int = 8080) {
     // an output path or staging directory
     val unique = java.util.UUID.randomUUID().toString.take(8)
     val out = s"${sys.props("java.io.tmpdir")}/graft-export/query-$stamp-$unique$ext"
-    val path = engine.exportFile(sql, fileType, out)
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    // download is served from memory; don't let export files pile up
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
-    ex.getResponseHeaders.set("attachment",
-      s"filename=${java.net.URLEncoder.encode(new java.io.File(path).getName, "UTF-8")}")
-    respond(ex, 200, bytes, "application/octet-stream")
+    val path = java.nio.file.Paths.get(engine.exportFile(sql, fileType, out))
+    // streamed from disk, then deleted so export files don't pile up
+    try {
+      ex.getResponseHeaders.set("attachment",
+        s"filename=${java.net.URLEncoder.encode(path.getFileName.toString, "UTF-8")}")
+      ex.getResponseHeaders.set("Content-Type", "application/octet-stream")
+      ex.sendResponseHeaders(200, java.nio.file.Files.size(path))
+      java.nio.file.Files.copy(path, ex.getResponseBody)
+      ex.close()
+    } finally java.nio.file.Files.deleteIfExists(path)
   })
 
   server.createContext("/query/history", ex => handle(ex, "/query/history", "GET") {

@@ -1,26 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Distributed XLSX source.
   *
   * The reference reads workbooks on a single thread with calamine and
   * merges multiple files into one in-memory batch
   * (reference: src/data_source/excel.rs:12-60, `path#Sheet` selector).
-  * Here the *schema* is inferred on the driver from the first matching
-  * file's header + first data row, and the *data* is parsed inside
-  * executors over `sparkContext.binaryFiles` — each executor unzips
-  * and StAX-streams its own files, so a directory of thousands of
-  * workbooks scales horizontally (one task per file; workbook zip
-  * format isn't splittable within a file, like gzip).
-  *
-  * Type mapping (reference excel.rs:109-126): shared/inline strings →
-  * string, numbers → double — or BIGINT when every value in the first
-  * file is whole (excel.rs types Int cells as Int32/Int64; an xlsx id
-  * column must join a parquet bigint cleanly) — booleans → boolean,
-  * date-styled numbers and `yyyy-MM-dd HH:mm:ss` strings → timestamp
-  * (excel.rs:81-93). Header row supplies column names.
+  * Here the V2 source ([[XlsxTableProvider]]) infers the schema on the
+  * driver (type mapping: [[XlsxV2Util.inferSchema]]) and parses data
+  * inside executors, one task per workbook (a zip isn't splittable
+  * within a file, like gzip), so thousands of workbooks scale out.
   */
 object XlsxSource {
 
@@ -31,61 +22,13 @@ object XlsxSource {
       case i => (path.substring(0, i), Some(path.substring(i + 1)))
     }
 
-  private def cellToField(name: String, v: Any): StructField = v match {
-    case _: java.lang.Double => StructField(name, DoubleType, nullable = true)
-    case _: java.lang.Boolean => StructField(name, BooleanType, nullable = true)
-    case _: java.sql.Timestamp => StructField(name, TimestampType, nullable = true)
-    case _ => StructField(name, StringType, nullable = true)
-  }
-
-  private def coerce(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (x: java.sql.Timestamp, TimestampType) => x
-    case (x: String, TimestampType) =>
-      Option(XlsxV2Util.parseTsMicros(x)).map(us => new java.sql.Timestamp(us / 1000L)).orNull
-    case (x: java.lang.Double, DoubleType) => x
-    case (x: java.lang.Double, LongType) =>
-      if (x == math.floor(x) && !x.isInfinite) java.lang.Long.valueOf(x.toLong) else null
-    case (x: String, LongType) =>
-      try { x.toLong: java.lang.Long } catch { case _: Exception => null }
-    case (x: java.lang.Boolean, BooleanType) => x
-    case (x: java.lang.Double, StringType) =>
-      // whole numbers render without the trailing ".0" Excel never shows
-      if (x == math.floor(x) && !x.isInfinite) x.toLong.toString else x.toString
-    case (x, StringType) => x.toString
-    case (x: String, DoubleType) => try { x.toDouble: java.lang.Double } catch { case _: Exception => null }
-    case (x, DoubleType) => try { x.toString.toDouble: java.lang.Double } catch { case _: Exception => null }
-    case _ => null // type drift vs inferred schema → null, never a mistyped value
-  }
-
   /** Read through the V2 source (column pruning, catalog-integrated);
-    * `path#Sheet` selectors supported.
+    * `path#Sheet` selectors supported; a known `schema` skips inference.
     */
-  def read(spark: SparkSession, rawPath: String): DataFrame = {
+  def read(spark: SparkSession, rawPath: String, schema: Option[StructType] = None): DataFrame = {
     val (p, s) = splitSheet(rawPath)
-    val reader = spark.read.format("graft-xlsx")
+    val reader = schema.foldLeft(spark.read.format("graft-xlsx"))(_.schema(_))
     s.foreach(sheet => reader.option("sheet", sheet))
     reader.load(p)
-  }
-
-  /** The original RDD-based reader (kept as the no-V2 fallback and for
-    * comparison in specs).
-    */
-  def readRdd(spark: SparkSession, rawPath: String): DataFrame = {
-    val (path, sheet) = splitSheet(rawPath)
-    // one shared inference path with the V2 source — the two must not drift
-    val schema = XlsxV2Util.inferSchema(path, sheet)
-    val width = schema.length
-    val types = schema.fields.map(_.dataType)
-
-    // Executor-side: one task per workbook file.
-    val rowsRdd = spark.sparkContext.binaryFiles(path)
-      .flatMap { case (_, stream) =>
-        val parts = XlsxParse.readParts(() => stream.open(), sheet)
-        XlsxParse.rows(parts, width).drop(1).map { cells =>
-          Row.fromSeq(cells.zip(types).map { case (c, t) => coerce(c, t) })
-        }
-      }
-    spark.createDataFrame(rowsRdd, schema)
   }
 }

@@ -15,10 +15,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** XLSX as a DataSource V2 (`spark.read.format("graft-xlsx")`), the
-  * catalog-integrated sibling of [[XlsxSource]]:
+  * reader behind [[XlsxSource.read]]:
   *
-  *  - schema inference once on the driver (header + first data row of
-  *    the first matching file);
+  *  - schema inference on the driver (header of the first matching
+  *    file, cell types over all), skipped when given a schema;
   *  - one InputPartition per workbook file (xlsx zips aren't
   *    splittable within a file), so a directory of workbooks fans out
   *    across executors;
@@ -255,8 +255,8 @@ case class XlsxReaderFactory(
         case (x: String, LongType) =>
           try x.toLong catch { case _: Exception => null }
         // type drift vs the inferred schema (boolean/date cell in a
-        // numeric column, etc.) → null, matching the RDD path — never
-        // store a mistyped value into an InternalRow slot
+        // numeric column, etc.) → null — never store a mistyped value
+        // into an InternalRow slot
         case _ => null
       }
 

@@ -25,6 +25,9 @@ case class FetchResult(
   *   happen lazily at query time, exactly like the reference.
   * - fetch caps rows with LIMIT, applied *inside* the plan (Spark
   *   plans a CollectLimit — the full result is never materialized).
+  * - file reads (direct paths, catalog names) infer a schema once:
+  *   `Formats.read` caches it by (raw path, format, splittable, SQL
+  *   conf) while the path's (file, length, mtime) listing is unchanged.
   */
 class Engine(
     val spark: SparkSession,
