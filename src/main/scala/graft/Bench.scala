@@ -73,7 +73,7 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => }
 
-    // Constant-work noise probe (graft.tools.NoiseProbe's workload):
+    // Constant-work noise probe (calibration in SCALE.md, "The noise floor"):
     // identical plan + bytes every run, so its median wall IS the
     // machine's load factor for THIS bench session. Written into the
     // detail JSON; check_bench_regress.py divides current by baseline

@@ -13,10 +13,11 @@ import java.util.concurrent.atomic.AtomicInteger
   * thread pool — Spark schedules jobs from many threads at once, and
   * at verify SFs most per-query wall time is fixed latency (job
   * scheduling, codegen, streaming triggers), not CPU, so overlapping
-  * them cuts total wall several-fold. The engine/format family shares
-  * one on-disk catalog file and fixed-name temp views, so it runs
-  * serially first; every other query touches only its own state
-  * (per-query scratch dirs, nanoTime-unique stream sinks).
+  * them cuts total wall several-fold. Every query touches only its own
+  * state (per-query scratch dirs, nanoTime-unique stream sinks); the
+  * engine family resolves its tables inside each query's parsed plan,
+  * registers no temp views, and its shared catalog dir serializes
+  * writers with one lock per directory.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -74,12 +75,8 @@ object Verify {
       }
     }
 
-    val serialKeys = graft.queries.EngineOps.queries.keySet
-    val (serial, par) = all.partition { case (k, _) => serialKeys(k) }
-    serial.foreach { case (n, f) => runOne(n, f) }
-
     val pool = Executors.newFixedThreadPool(math.min(8, math.max(2, cpus.toInt)))
-    par.foreach { case (n, f) =>
+    all.foreach { case (n, f) =>
       val task: Runnable = () => runOne(n, f)
       pool.submit(task)
     }

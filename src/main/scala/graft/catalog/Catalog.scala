@@ -44,15 +44,16 @@ case class HistoryEntry(sql: String, status: String, createdAt: String)
   * The reference keeps both in a SQLite db (reference: src/sqlite.rs:
   * 1-46); here they are JSONL files under `dir` — append-mostly,
   * human-readable, and trivially portable to any shared filesystem a
-  * cluster's driver can see. All mutation goes through this class and
-  * is synchronized; at 100 TB scale the catalog holds table *pointers*
-  * (paths), never data, so its size is O(tables).
+  * cluster's driver can see. All access holds one lock per directory,
+  * shared by every instance in the process (ids never race); at 100 TB
+  * the catalog holds table *pointers* (paths), never data: O(tables).
   */
 class Catalog(dir: String) {
   private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
   private val catalogFile: Path = Paths.get(dir, "catalog.jsonl")
   private val historyFile: Path = Paths.get(dir, "query_history.jsonl")
   Files.createDirectories(Paths.get(dir))
+  private val lock = Catalog.locks.computeIfAbsent(Paths.get(dir).toRealPath().toString, _ => new Object)
 
   private def readLines(p: Path): Seq[String] =
     if (Files.exists(p)) Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq.filter(_.nonEmpty)
@@ -62,7 +63,7 @@ class Catalog(dir: String) {
     Files.write(p, (line + "\n").getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
 
-  def entries: Seq[CatalogEntry] = synchronized {
+  def entries: Seq[CatalogEntry] = lock.synchronized {
     readLines(catalogFile).map(l => mapper.readValue(l, classOf[CatalogEntry]))
   }
 
@@ -80,7 +81,7 @@ class Catalog(dir: String) {
   /** Latest entry: parses newest-first, only lines quoting the name as Jackson writes it. */
   def lookup(tableRef: String): Option[CatalogEntry] = {
     val quoted = mapper.writeValueAsString(tableRef)
-    synchronized(readLines(catalogFile)).reverseIterator.filter(_.contains(quoted))
+    lock.synchronized(readLines(catalogFile)).reverseIterator.filter(_.contains(quoted))
       .map(mapper.readValue(_, classOf[CatalogEntry])).find(_.tableRef == tableRef)
   }
 
@@ -93,14 +94,14 @@ class Catalog(dir: String) {
       bucketBy: Option[String] = None,
       sortBy: Option[String] = None,
       numBuckets: Option[Int] = None,
-      generation: Option[String] = None): CatalogEntry = synchronized {
+      generation: Option[String] = None): CatalogEntry = lock.synchronized {
     val e = CatalogEntry(readLines(catalogFile).size + 1L, tableRef, tablePath, schema, comment, entryType,
       bucketBy, sortBy, numBuckets, generation)
     appendLine(catalogFile, mapper.writeValueAsString(e))
     e
   }
 
-  def recordQuery(sql: String, status: String): Unit = synchronized {
+  def recordQuery(sql: String, status: String): Unit = lock.synchronized {
     val e = HistoryEntry(sql, status, java.time.Instant.now().toString)
     appendLine(historyFile, mapper.writeValueAsString(e))
   }
@@ -108,9 +109,11 @@ class Catalog(dir: String) {
   /** Latest `n` queries, newest first (reference:
     * src/controllers.rs:259-276 limit 30).
     */
-  def history(n: Int = 30): Seq[HistoryEntry] = synchronized {
+  def history(n: Int = 30): Seq[HistoryEntry] = lock.synchronized {
     // parse only the last n lines — the log is unbounded
     readLines(historyFile).takeRight(n).reverse
       .map(l => mapper.readValue(l, classOf[HistoryEntry]))
   }
 }
+
+object Catalog { private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object] }

@@ -87,7 +87,7 @@ object Dedup {
     // docsHint the signature relation is repartitioned by the bucket
     // key: the self-join is co-partitioned (no further exchange) and
     // every per-task partial-dedup table is right-sized. Re-measured
-    // at 50× (stage probe, tools/NgramProbe): 1607 s → 210 s, zero
+    // at 50× (SCALE.md, "Stage anatomy and the fix"): 1607 s → 210 s, zero
     // spill, same 6 762 599 pairs. At or below the session width the
     // repartition is skipped — the relation is broadcast-small there
     // and the extra exchange only costs (measured +1.5 s/query at

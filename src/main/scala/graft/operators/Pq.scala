@@ -65,9 +65,9 @@ object Pq {
 
   /** Lloyd-refined codebooks: `iters` rounds of assign (argmin-L2,
     * same struct-min as encode) + per-(block, cid, dim) mean — the
-    * per-block k-means that production PQ trains (PqSweep measures the
-    * recall lift). The mean is accumulated as FIXED-POINT LONGS
-    * (x·2^20 truncated) so the centroid update is an integer sum —
+    * per-block k-means that production PQ trains (SCALE.md, "PQ quality
+    * at realistic N", records the recall lift). The mean is accumulated
+    * as FIXED-POINT LONGS (x·2^20 truncated) so the centroid update is an integer sum —
     * exact and independent of partial-aggregation order, unlike `avg`
     * over doubles — which makes trained codebooks bit-reproducible
     * across partitionings and therefore oracle-gateable (the ~1e-6

@@ -1,9 +1,15 @@
 package graft.sql
 
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+
 import graft.GraftSession
 import graft.catalog.Catalog
 import graft.sources.{Formats, Writers}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.graftglue.Bridge
 
 /** What POST /fetch returns (reference: src/response/schema.rs
   * FetchResult — header, stringified rows, sql_type, query_time).
@@ -18,16 +24,15 @@ case class FetchResult(
   * equivalent of the reference's controller + DataFusion context
   * (reference: src/controllers.rs:25-150, src/data_source/context.rs).
   *
-  * - SELECT: direct-path refs become temp views, remaining unresolved
-  *   names are resolved through the persistent [[Catalog]], then the
-  *   statement runs through Spark SQL (Catalyst plans it).
+  * - SELECT: parsed once; direct-path refs and [[Catalog]] names become
+  *   their relations inside the parsed plan (per query: requests share
+  *   no session state); other names resolve as usual in Spark.
   * - CREATE TABLE … LOCATION: persisted to the catalog only — reads
   *   happen lazily at query time, exactly like the reference.
   * - fetch caps rows with LIMIT, applied *inside* the plan (Spark
   *   plans a CollectLimit — the full result is never materialized).
-  * - file reads (direct paths, catalog names) infer a schema once:
-  *   `Formats.read` caches it by (raw path, format, splittable, SQL
-  *   conf) while the path's (file, length, mtime) listing is unchanged.
+  * - file reads (direct paths, catalog names) infer a schema once per
+  *   unchanged file listing (`Formats.read` caches it).
   */
 class Engine(
     val spark: SparkSession,
@@ -43,30 +48,29 @@ class Engine(
   def resolvePath(p: String): String =
     if (p.startsWith("/") || p.contains("://")) p else s"$dataDir/$p"
 
-  /** Build the DataFrame for a SELECT: rewrite direct paths, resolve
-    * catalog tables, hand to Spark SQL.
+  /** Build the DataFrame for a SELECT: rewrite direct paths, then
+    * substitute each table ref's [[relation]] into the parsed plan.
     */
-  def sqlDf(sql: String): DataFrame = {
-    val rewritten = DirectPath.rewrite(spark, sql, resolvePath)
-    DirectPath.unresolvedTables(spark, rewritten).foreach { name =>
-      // always re-resolve catalog names: a re-registered table (new
-      // LOCATION) must not keep serving a stale first-read temp view.
-      // Names without a catalog entry (plain temp views) are untouched.
-      catalog.lookup(name).foreach { e =>
-        if (e.numBuckets.isDefined) {
-          // bucketed entries resolve through the SESSION catalog; a
-          // temp view left by an earlier pointer-registration of the
-          // same name would shadow the bucketed table (temp views win
-          // name resolution), so drop it. tableExists must ask for
-          // the QUALIFIED name — the bare form also matches temp views
-          spark.catalog.dropTempView(name)
+  def sqlDf(sql: String): DataFrame =
+    Bridge.sql(spark, DirectPath.rewrite(spark, sql, resolvePath))(DirectPath.substitute(_, relation))
+
+  /** A direct path reads its files, a catalog name its LOCATION — read
+    * afresh each query, so a re-registered name never serves a stale
+    * read — and a bucketed entry is the session-catalog table, named
+    * with its catalog and database so no temp view can shadow it.
+    */
+  private def relation(ref: Seq[String]): Option[LogicalPlan] = {
+    def read(path: String) = SubqueryAlias(ref, Formats.readAuto(spark, path).queryExecution.analyzed)
+    ref match {
+      case Seq(DirectPath.Qualifier, path) => Some(read(path))
+      case Seq(name) => catalog.lookup(name).map {
+        case e if e.numBuckets.isEmpty => read(resolvePath(e.tablePath))
+        case e =>
           if (!spark.catalog.tableExists(s"default.$name")) materializeBucketed(name, e)
-        } else {
-          Formats.readAuto(spark, resolvePath(e.tablePath)).createOrReplaceTempView(name)
-        }
+          UnresolvedRelation(Seq("spark_catalog", "default", name))
       }
+      case _ => None
     }
-    spark.sql(rewritten)
   }
 
   /** Write the bucketed copy of a CLUSTERED BY table and register it
@@ -76,57 +80,42 @@ class Engine(
     * subsequent same-key equijoin/agg on the table skips its shuffle,
     * which is the point of declaring the bucket spec at 100 TB.
     *
-    * Concurrency/consistency: the output dir is VERSIONED by the
-    * effective bucket spec (path|key|sort|buckets hash), so a
-    * re-registered LOCATION materializes into a fresh dir instead of
-    * overwriting files another session is mid-scan on; a cross-process
-    * file lock serializes writers of the same version, and a finished
-    * version (Hadoop `_SUCCESS` marker) is re-registered into a fresh
-    * session via DDL over the existing files — no rewrite. Old
-    * versions are engine-managed state a deployment GCs with the
-    * catalog dir. When the DDL had no SORTED BY, the effective sort
-    * key (= bucket key) is recorded back into the catalog so the
-    * persisted metadata describes the materialized layout.
+    * The version is the effective bucket spec (path|key|sort|buckets),
+    * so a re-registered LOCATION materializes into a fresh dir; a
+    * finished version is re-registered into a fresh session via DDL
+    * over the existing files — no rewrite. When the DDL had no SORTED
+    * BY, the effective sort key (= bucket key) is recorded back into
+    * the catalog so the persisted metadata describes the layout.
     */
   private def materializeBucketed(name: String, e: graft.catalog.CatalogEntry): Unit = {
     val key = e.bucketBy.getOrElse(
       throw new GraftSqlException(s"Catalog entry '$name' has buckets but no CLUSTERED BY column"))
     val sortKey = e.sortBy.getOrElse(key)
     val nBuckets = e.numBuckets.get
-    val ver = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"${e.tablePath}|$key|$sortKey|$nBuckets") & 0x7fffffff)
-    val outDir = java.nio.file.Paths.get(catalogDir, "bucketed", s"$name-$ver")
-    java.nio.file.Files.createDirectories(outDir.getParent)
-    val lockPath = outDir.getParent.resolve(s".$name-$ver.lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-    try {
-      val lock = ch.lock() // blocks while another process writes this version
-      try {
-        val done = java.nio.file.Files.exists(outDir.resolve("_SUCCESS"))
-        if (done) {
-          // files are complete — register them in THIS session without
-          // rewriting (keeps the bucket metadata via DDL)
-          val schemaDdl = spark.read.parquet(outDir.toString).schema.toDDL
-          spark.sql(s"DROP TABLE IF EXISTS `$name`") // DDL-rebuild path may hold an older registration
-          spark.sql(
-            s"""CREATE TABLE `$name` ($schemaDdl) USING parquet
-               |CLUSTERED BY (`$key`) SORTED BY (`$sortKey`) INTO $nBuckets BUCKETS
-               |LOCATION '${outDir.toString}'""".stripMargin)
-        } else {
-          // repartition on the bucket key first: hash partitioning ==
-          // bucket hashing, so each task writes exactly its one bucket
-          // file — avoids the (scan tasks × buckets) small-file blowup
-          // at scale and parallelizes the write across buckets.
-          Formats.readAuto(spark, resolvePath(e.tablePath))
-            .repartition(nBuckets, org.apache.spark.sql.functions.col(key))
-            .write.mode("overwrite").format("parquet")
-            .bucketBy(nBuckets, key).sortBy(sortKey)
-            .option("path", outDir.toString)
-            .saveAsTable(name)
-        }
-      } finally lock.release()
-    } finally ch.close()
+    val table = s"spark_catalog.default.`$name`"
+    underVersionLock("bucketed", name, s"${e.tablePath}|$key|$sortKey|$nBuckets") { (outDir, done) =>
+      if (done) {
+        // files are complete — register them in THIS session without
+        // rewriting (keeps the bucket metadata via DDL)
+        val schemaDdl = spark.read.parquet(outDir.toString).schema.toDDL
+        spark.sql(s"DROP TABLE IF EXISTS $table") // DDL-rebuild path may hold an older registration
+        spark.sql(
+          s"""CREATE TABLE $table ($schemaDdl) USING parquet
+             |CLUSTERED BY (`$key`) SORTED BY (`$sortKey`) INTO $nBuckets BUCKETS
+             |LOCATION '${outDir.toString}'""".stripMargin)
+      } else {
+        // repartition on the bucket key first: hash partitioning ==
+        // bucket hashing, so each task writes exactly its one bucket
+        // file — avoids the (scan tasks × buckets) small-file blowup
+        // at scale and parallelizes the write across buckets.
+        Formats.readAuto(spark, resolvePath(e.tablePath))
+          .repartition(nBuckets, org.apache.spark.sql.functions.col(key))
+          .write.mode("overwrite").format("parquet")
+          .bucketBy(nBuckets, key).sortBy(sortKey)
+          .option("path", outDir.toString)
+          .saveAsTable(table)
+      }
+    }
     if (e.sortBy.isEmpty)
       catalog.register(name, e.tablePath, e.schema, e.comment, e.entryType,
         e.bucketBy, Some(sortKey), e.numBuckets)
@@ -140,37 +129,38 @@ class Engine(
     * so a pipeline's OUTPUT (near-dup verdicts, quality reports)
     * becomes a queryable relation instead of a one-shot result set.
     *
-    * Same consistency conventions as [[materializeBucketed]]: the
-    * output dir is VERSIONED by a hash of the defining SELECT (a
-    * re-issued identical CTAS reuses the finished version via its
-    * `_SUCCESS` marker instead of rewriting under a concurrent
-    * scanner; a CHANGED select materializes a fresh dir), a
-    * cross-process file lock serializes writers of one version, and
-    * the dir carries a `.parquet` suffix so the catalog's normal
-    * extension-inferred read path resolves it with zero special-casing.
-    * 100 TB note: the write is a plain distributed parquet write of
-    * whatever plan Catalyst chose for the SELECT — the catalog itself
-    * still stores only the pointer.
+    * The version is the defining SELECT: a re-issued identical CTAS
+    * reuses the finished files instead of rewriting under a concurrent
+    * scanner. The dir's `.parquet` suffix lets the catalog's normal
+    * extension-inferred read path resolve it. 100 TB note: the write is
+    * a plain distributed parquet write of whatever plan Catalyst chose
+    * for the SELECT — the catalog itself still stores only the pointer.
     */
   private def materializeCtas(name: String, select: String): Unit = {
-    val ver = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(select) & 0x7fffffff)
-    val outDir = java.nio.file.Paths.get(catalogDir, "ctas", s"$name-$ver.parquet")
-    java.nio.file.Files.createDirectories(outDir.getParent)
-    val lockPath = outDir.getParent.resolve(s".$name-$ver.lock")
-    val ch = java.nio.channels.FileChannel.open(lockPath,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-    try {
-      val lock = ch.lock()
-      try {
-        if (!java.nio.file.Files.exists(outDir.resolve("_SUCCESS")))
-          sqlDf(select).write.mode("overwrite").parquet(outDir.toString)
-      } finally lock.release()
-    } finally ch.close()
+    val outDir = underVersionLock("ctas", name, select, ".parquet") { (outDir, done) =>
+      if (!done) sqlDf(select).write.mode("overwrite").parquet(outDir.toString)
+    }
     catalog.register(name, outDir.toString, Nil, None, entryType = "MANAGED")
-    // a pointer-registration temp view of the same name from an earlier
-    // read must not shadow the new version on re-resolution
-    spark.catalog.dropTempView(name)
+  }
+
+  /** Run `body(outDir, done)` on `<catalogDir>/<kind>/<name>-<hash of
+    * spec><suffix>` under a cross-process file lock that serializes its
+    * writers (`done`: its Hadoop `_SUCCESS` marker exists); returns
+    * `outDir`. A changed spec never overwrites files another session is
+    * mid-scan on; old versions are GC'd with the catalog dir.
+    */
+  private def underVersionLock(kind: String, name: String, spec: String, suffix: String = "")(
+      body: (Path, Boolean) => Unit): Path = {
+    val ver = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(spec) & 0x7fffffff)
+    val outDir = Paths.get(catalogDir, kind, s"$name-$ver$suffix")
+    Files.createDirectories(outDir.getParent)
+    val ch = FileChannel.open(outDir.getParent.resolve(s".$name-$ver.lock"),
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    try {
+      val lock = ch.lock() // blocks while another process writes this version
+      try body(outDir, Files.exists(outDir.resolve("_SUCCESS"))) finally lock.release()
+    } finally ch.close()
+    outDir
   }
 
   /** The /fetch DataFrame: SELECT wrapped with a row cap

@@ -56,16 +56,9 @@ object SqlClassify {
       DmlStatement(trimmed)
     } else if (head.startsWith("create")) {
       trimmed match {
-        case CtasRe(name, select) =>
-          if (name.contains('.'))
-            throw new GraftSqlException(
-              s"Multi-part table names are not supported: '$name' — use a single-part name")
-          CtasStatement(name, select.trim)
+        case CtasRe(name, select) => CtasStatement(singlePart(name), select.trim)
         case CreateTableRe(name, cols, comment, bucketCol, sortCol, nBuckets, location) =>
-          if (name.contains('.'))
-            throw new GraftSqlException(
-              s"Multi-part table names are not supported: '$name' — use a single-part name")
-          CreateTableStatement(name, parseColumns(cols), location, Option(comment),
+          CreateTableStatement(singlePart(name), parseColumns(cols), location, Option(comment),
             Option(bucketCol), Option(sortCol), Option(nBuckets).map(_.toInt))
         case _ => throw new GraftSqlException(
           "Unsupported CREATE syntax — expected: CREATE TABLE name (col type, ...) [COMMENT '...'] " +
@@ -77,6 +70,10 @@ object SqlClassify {
         "Currently, only the Select and Create statements are supported.")
     }
   }
+
+  private def singlePart(name: String): String =
+    if (!name.contains('.')) name
+    else throw new GraftSqlException(s"Multi-part table names are not supported: '$name' — use a single-part name")
 
   private def parseColumns(cols: String): Seq[TableField] =
     // split only on commas OUTSIDE parentheses so parameterized types

@@ -69,19 +69,19 @@ class EngineSpec extends AnyFunSuite {
     spark.sql(s"drop table if exists $name")
   }
 
-  test("re-registering a pointer table as bucketed evicts the stale temp view") {
+  test("re-registering a pointer table as bucketed serves the bucketed table") {
     val dir = Files.createTempDirectory("graft-cat").toString
     val eng = new Engine(spark, dataDir = sfDir, catalogDir = dir)
     val name = "li_rereg_spec"
     spark.sql(s"drop table if exists $name")
-    // plain pointer first: nation (25 rows) served via a temp view
+    // plain pointer first: nation (25 rows) read from its LOCATION
     eng.execute(s"create table $name () location 'nation.parquet'")
     assert(eng.sqlDf(s"select count(*) as n from $name").head.getLong(0) == 25)
     // re-register the SAME name as a bucketed table over region (5 rows)
     eng.execute(s"create table $name () clustered by (r_regionkey) into 2 buckets location 'region.parquet'")
-    // the stale nation temp view must not shadow the bucketed table
+    // the earlier pointer registration must not shadow the bucketed table
     assert(eng.sqlDf(s"select count(*) as n from $name").head.getLong(0) == 5,
-      "bucketed re-registration must evict the stale temp view")
+      "bucketed re-registration must serve the bucketed table")
     spark.sql(s"drop table if exists $name")
   }
 
@@ -181,5 +181,72 @@ class EngineSpec extends AnyFunSuite {
     val eng = freshEngine()
     val res = eng.execute("select 'x.csv' as lit_col")
     assert(res.rows == Seq(Seq("x.csv")))
+  }
+
+  test("table refs resolve in CTE bodies, subqueries, union branches and derived tables") {
+    val eng = freshEngine()
+    eng.execute("create table cust_ext () location 'customer.parquet'")
+    eng.execute("create table nat_cat () location 'nation.parquet'")
+    val custs = spark.read.parquet(s"$sfDir/customer.parquet").count()
+    val cases = Seq(
+      "CTE body" -> ("with x as (select * from cust_ext) select count(*) from x", custs),
+      "CTE shadows a catalog name" -> ("with cust_ext as (select 1 as a) select count(*) from cust_ext", 1L),
+      "IN-subquery" -> (s"select count(*) from '$sfDir/region.parquet' " +
+        "where r_regionkey in (select n_regionkey from nat_cat)", 5L),
+      "UNION branch" -> (s"select count(*) from (select n_nationkey from '$sfDir/nation.parquet' " +
+        "union all select n_nationkey from nat_cat)", 50L),
+      "derived table" -> ("select count(*) from (select * from nat_cat where n_regionkey = 0) t", 5L),
+      "direct path in a CTE body" -> (s"with r as (select * from '$sfDir/region.parquet') select count(*) from r", 5L),
+      "name.col qualifier" -> ("select count(nat_cat.n_name) from nat_cat", 25L))
+    val failures = cases.flatMap { case (label, (sql, want)) =>
+      scala.util.Try(eng.sqlDf(sql).head.getLong(0)).fold(
+        e => Some(s"$label: ${e.getMessage.takeWhile(_ != '\n')}"),
+        got => if (got == want) None else Some(s"$label: got $got, want $want"))
+    }
+    if (failures.nonEmpty) fail(failures.mkString("\n"))
+  }
+
+  test("an engine query neither overwrites a session view nor leaves one behind") {
+    Tables(spark, sfDir, "nation").createOrReplaceTempView("nation")
+    val before = spark.catalog.listTables().collect().map(_.name).toSet
+    val eng = freshEngine()
+    eng.execute("create table nation () location 'region.parquet'")
+    eng.execute("create table cust_iso () location 'customer.parquet'")
+    assert(eng.execute("select count(*) from nation").rows == Seq(Seq("5")))
+    eng.execute(s"select count(*) from cust_iso join '$sfDir/supplier.parquet' on c_nationkey = s_nationkey")
+    val viewRows = spark.table("nation").count()
+    val added = spark.catalog.listTables().collect().map(_.name).toSet -- before
+    assert(viewRows == 25 && added.isEmpty, s"session view nation reads $viewRows rows (want 25); left behind: $added")
+  }
+
+  test("concurrent engines read their own table for a shared name; a concurrent CTAS never hides it") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+    val a = freshEngine()
+    val b = freshEngine()
+    a.execute("create table shared_nm () location 'nation.parquet'")
+    b.execute("create table shared_nm () location 'region.parquet'")
+    val ctas = Seq("select n_nationkey from nation_src", "select n_nationkey from nation_src where n_regionkey = 0")
+      .map(s => s"create table ctas_nm as ${s.replace("nation_src", s"'$sfDir/nation.parquet'")}")
+    a.execute(ctas.head)
+    val errors = new ConcurrentLinkedQueue[String]
+    val fetchers = new java.util.concurrent.CountDownLatch(4)
+    def attempt(body: => Unit): Unit =
+      try body catch { case e: Throwable => errors.add(String.valueOf(e.getMessage).takeWhile(_ != '\n')) }
+    val pool = Executors.newFixedThreadPool(5)
+    (0 until 4).foreach { t =>
+      pool.submit((() => try (1 to 50).foreach(_ => attempt {
+        val (eng, want) = if (t % 2 == 0) (a, "25") else (b, "5")
+        val got = eng.execute("select count(*) from shared_nm").rows.head.head
+        if (got != want) errors.add(s"thread $t read $got rows for shared_nm, want $want")
+        val n = a.execute("select count(*) from ctas_nm").rows.head.head
+        if (n != "25" && n != "5") errors.add(s"thread $t read $n rows for ctas_nm")
+      }) finally fetchers.countDown()): Runnable)
+    }
+    pool.submit((() => Iterator.from(1).takeWhile(_ => fetchers.getCount > 0)
+      .foreach(i => attempt(a.execute(ctas(i % 2))))): Runnable)
+    pool.shutdown()
+    assert(pool.awaitTermination(5, TimeUnit.MINUTES))
+    val distinct = scala.jdk.CollectionConverters.IterableHasAsScala(errors).asScala.toSeq.distinct
+    if (distinct.nonEmpty) fail(s"${errors.size} failures, e.g. ${distinct.take(3).mkString("; ")}")
   }
 }
