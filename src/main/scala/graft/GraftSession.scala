@@ -1,21 +1,32 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftglue.Bridge
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine, and the one way to change a
+  * conf for part of the work.
   *
   * Spark-native replacement for the reference's DataFusion
   * `SessionContext` (reference: src/data_source/context.rs:17-24).
-  * One place to pin the configs that matter at scale: AQE (runtime
-  * re-planning, skew-join handling, partition coalescing), a shuffle
-  * partition count sized to the local core count (the 200 default is
-  * wrong for local mode and is re-derived by AQE on a cluster), and a
-  * UTC session timezone so timestamp semantics match the oracle.
+  * [[builder]] pins the static confs, [[tune]] the runtime ones: AQE
+  * (runtime re-planning, skew-join handling, partition coalescing), a
+  * UTC session timezone so timestamp semantics match the oracle, the
+  * broadcast threshold, runtime bloom filters and the parquet
+  * nanosecond-timestamp read. Every main builds its session through
+  * [[local]]; the HTTP server and the tests through [[apply]].
+  *
+  * Nothing writes a session's conf after [[tune]]. Queries share one
+  * session and run concurrently (Verify's pool, the HTTP server's
+  * handlers), so a write would reach every query in flight. Work that
+  * needs other settings for a while — a training loop without AQE, a
+  * stream drain on few shuffle partitions — runs on a child session
+  * that [[withConf]] clones for it.
   */
 object GraftSession {
 
   /** Runtime-settable confs applied to any session (including ones the
-    * driver built for us in Verify/Bench). Safe to call repeatedly.
+    * driver built for us in Verify/Bench). Call it once, right after
+    * the session is built.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -32,66 +43,42 @@ object GraftSession {
     // application scan ≥ 10 GB): inert at test SFs, exactly the
     // selective fact-fact shapes (q03/q04) at 100 TB.
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+    // Earlier driver testdata wrote events.ts as parquet
+    // TIMESTAMP(NANOS), which Spark has no type for: read it as int64
+    // nanos ([[Tables.normalizeEventTs]] handles both vintages).
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
 
-  /** Run `body` with AQE off, restoring the previous value after.
+  /** Run `body` on a child of `spark` whose conf is `spark`'s plus
+    * `overrides`; `spark`'s own conf is never touched, so queries
+    * running beside `body` keep their settings.
     *
-    * For DRIVER-SIDE iteration loops (Lloyd rounds, gradient descent)
-    * whose per-iteration action is a bounded aggregate (≤ k rows, one
-    * tiny exchange): AQE can never improve that shape — nothing to
-    * coalesce or skew-split — but re-planning after the shuffle stage
-    * costs an extra scheduled job per collect, which the iteration
-    * count multiplies. Results are unchanged (AQE is physical-only;
-    * the aggregates are partition-order-free by construction).
-    *
-    * SCOPE WARNING: the toggle is SESSION-WIDE — while any training
-    * loop holds it, every concurrent query on the same session (e.g.
-    * the non-training builds in the standing-index pool) plans without
-    * AQE coalescing/skew handling. Results are unaffected, but a
-    * concurrent query that NEEDS AQE for performance should run on
-    * `spark.newSession()` (independent runtime conf, shared state).
-    * The depth counter below only makes nested/concurrent *callers* of
-    * this method restore the right value — it does not scope the conf.
+    * The child shares the SparkContext, cache and catalog, but plans
+    * only its own DataFrames under the overrides: `body` moves the
+    * inputs it plans on into the child with [[Bridge.ofRows]] (a
+    * persisted input still reads the shared cache), and returns data
+    * already collected or moved back the same way, so the caller's
+    * actions plan under the caller's conf. A stream the child started
+    * must have terminated when `body` returns: the child's streaming
+    * listener bus is detached then.
     */
-  def withoutAqe[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    // depth-counted per session: concurrent training loops share one
-    // session conf (the standing-index build pool), so a naive
-    // save/set/restore pair can interleave and restore the WRONG
-    // previous value (leaving AQE off for the rest of the session).
-    // The first entrant saves, the last one restores.
-    aqeState.keySet.removeIf(s => s.sparkContext.isStopped) // no dead-session pins
-    val (lock, depth, saved) = aqeState.computeIfAbsent(spark,
-      _ => (new Object, new java.util.concurrent.atomic.AtomicInteger(0),
-        new java.util.concurrent.atomic.AtomicReference[String]("true")))
-    lock.synchronized {
-      if (depth.getAndIncrement() == 0) {
-        saved.set(spark.conf.get(key))
-        spark.conf.set(key, "false")
-      }
-    }
-    try body finally lock.synchronized {
-      if (depth.decrementAndGet() == 0) spark.conf.set(key, saved.get())
-    }
+  def withConf[T](spark: SparkSession, overrides: (String, String)*)(
+      body: SparkSession => T): T = {
+    val child = Bridge.cloneSession(spark)
+    overrides.foreach { case (k, v) => child.conf.set(k, v) }
+    try body(child) finally Bridge.releaseStreams(child)
   }
-  private val aqeState = new java.util.concurrent.ConcurrentHashMap[SparkSession,
-    (Object, java.util.concurrent.atomic.AtomicInteger,
-      java.util.concurrent.atomic.AtomicReference[String])]()
 
+  /** Static confs, plus a shuffle width that [[local]] sizes to its
+    * cores; [[tune]] sets the runtime ones once the session exists.
+    */
   def builder(master: String = "local[*]", app: String = "graft"): SparkSession.Builder =
-    SparkSession
-      .builder()
+    SparkSession.builder()
       .master(master)
       .appName(app)
       .config("spark.sql.shuffle.partitions",
         math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       // static conf: default 100-entry codegen class cache evicts and
       // re-pays multi-second compilation in many-query workloads
       .config("spark.sql.codegen.cache.maxEntries", "5000")
@@ -102,8 +89,17 @@ object GraftSession {
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
 
-  def apply(master: String = "local[*]", app: String = "graft"): SparkSession = {
-    val spark = builder(master, app).getOrCreate()
+  def apply(master: String = "local[*]", app: String = "graft"): SparkSession =
+    start(builder(master, app))
+
+  /** The session a main runs on: `local[cpus]`, one shuffle partition
+    * per core.
+    */
+  def local(cpus: Int): SparkSession =
+    start(builder(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus.toString))
+
+  private def start(b: SparkSession.Builder): SparkSession = {
+    val spark = tune(b.getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

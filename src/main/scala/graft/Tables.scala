@@ -15,7 +15,6 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       normalizeEventTs(spark.read.parquet(s"$sfDir/$name.parquet"))
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"), col("ts_ns"))
@@ -25,12 +24,13 @@ object Tables {
 
   /** Normalize `events.ts` across driver testdata vintages. Earlier
     * generations wrote parquet TIMESTAMP(NANOS), which Spark has no
-    * native type for — under `nanosAsLong` it surfaces as raw int64
-    * nanos; newer generations write TIMESTAMP(MICROS), which reads as
-    * a native (ntz) timestamp. Downstream code sees the same two
-    * columns either way: `ts` as a µs TimestampType for date/window
-    * functions, plus `ts_ns` as exact int64 nanos (integer `div` /
-    * `* 1000L` — double arithmetic would lose precision above 2^53).
+    * native type for — under `nanosAsLong` ([[GraftSession.tune]]) it
+    * surfaces as raw int64 nanos; newer generations write
+    * TIMESTAMP(MICROS), which reads as a native (ntz) timestamp.
+    * Downstream code sees the same two columns either way: `ts` as a
+    * µs TimestampType for date/window functions, plus `ts_ns` as exact
+    * int64 nanos (integer `div` / `* 1000L` — double arithmetic would
+    * lose precision above 2^53).
     */
   def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
@@ -48,7 +48,6 @@ object Tables {
     * (reference: src/data_source/context.rs:34-81).
     */
   def registerAll(spark: SparkSession, sfDir: String): SparkSession = {
-    GraftSession.tune(spark)
     names.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
     spark
   }

@@ -22,19 +22,11 @@ import java.util.concurrent.atomic.AtomicInteger
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // concurrent verify jobs share executor slots round-robin
-      // instead of queueing whole plans behind one another
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // FAIR scheduling (GraftSession.builder): concurrent verify jobs
+    // share executor slots round-robin instead of queueing whole plans
+    // behind one another
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -75,7 +67,7 @@ object Verify {
       }
     }
 
-    val pool = Executors.newFixedThreadPool(math.min(8, math.max(2, cpus.toInt)))
+    val pool = Executors.newFixedThreadPool(math.min(8, math.max(2, cpus)))
     all.foreach { case (n, f) =>
       val task: Runnable = () => runOne(n, f)
       pool.submit(task)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.storage.StorageLevel
 
 /** Product-quantization ANN (Jégou et al. 2011, "Product Quantization
@@ -98,15 +99,18 @@ object Pq {
         java.util.Arrays.asList(rel.collect(): _*), rel.schema)
     var books = localize(codebooks(corpus, m, ksub, dim))
     var i = 0
-    // AQE off for the Lloyd rounds (GraftSession.withoutAqe): each
-    // round's action is the m×ksub books collect — a bounded
-    // aggregate AQE can only add a re-planning job to.
-    graft.GraftSession.withoutAqe(spark) { while (i < iters) {
+    // AQE off for the Lloyd rounds, on a child session
+    // (GraftSession.withConf): each round's action is the m×ksub books
+    // collect — a bounded aggregate AQE can only add a re-planning job
+    // to. `subs` stays cached: the child reads the shared cache.
+    graft.GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") { child =>
+    val childSubs = Bridge.ofRows(child, subs)
+    while (i < iters) {
       // _sub rides inside the argmin struct: it is constant within the
       // (vec_id, b) group and (_dist, cid) is already a total order, so
       // the chosen row is unchanged — but the old re-join with `subs`
       // (a second corpus-sized shuffle per Lloyd iteration) disappears
-      val assigned = subs.join(broadcast(books), "b")
+      val assigned = childSubs.join(broadcast(books), "b")
         .withColumn("_dist", col("cn2") - lit(2.0) * dot(col("_sub"), col("cent")))
         .groupBy(col("vec_id"), col("b"))
         .agg(min(struct(col("_dist"), col("cid"), col("_sub"))).as("_best"))

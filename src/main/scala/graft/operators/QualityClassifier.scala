@@ -4,6 +4,7 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Bridge
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.GraftFunctions
@@ -72,10 +73,6 @@ object QualityClassifier {
     val feats = features(docs, id, text, label, buckets)
       .persist(StorageLevel.MEMORY_AND_DISK)
     feats.count()
-    // AQE off for the training loop only (GraftSession.withoutAqe):
-    // every iteration's gradient is one exchange of <= dim partially-
-    // aggregated rows; ~2 jobs/iteration -> 1.
-    val spark = docs.sparkSession
     val dim = buckets + extraFeatures
     val w = Array.fill(dim)(JBigDecimal.ZERO.setScale(12))
     // Adagrad accumulator (exact decimal: sums of squared exact
@@ -85,9 +82,15 @@ object QualityClassifier {
     // features needs ~10x the iterations
     val gAcc = Array.fill(dim)(JBigDecimal.ZERO)
     var it = 0
-    graft.GraftSession.withoutAqe(spark) { while (it < iters) {
+    // AQE off for the training loop only, on a child session
+    // (GraftSession.withConf) reading the cached features: every
+    // iteration's gradient is one exchange of <= dim partially-
+    // aggregated rows; ~2 jobs/iteration -> 1.
+    graft.GraftSession.withConf(docs.sparkSession, "spark.sql.adaptive.enabled" -> "false") { child =>
+    val childFeats = Bridge.ofRows(child, feats)
+    while (it < iters) {
       val scaled = w.map(_.movePointRight(12).longValueExact)
-      val grad = feats
+      val grad = childFeats
         .withColumn("_m", GraftFunctions.sumBucketWeights(col("_bk"), scaled)
           .cast("double") / lit(1e12))
         .withColumn("_r", (lit(1.0) / (lit(1.0) + exp(-col("_m")))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.Bridge
 
 /** Similarity search over embedding columns (SURVEY.md §2D).
   *
@@ -110,9 +111,12 @@ object Similarity {
     // non-64-dim embedding corpus the pre-moments form handled)
     val d = if (dim > 0) dim else cents.head._2.length
     var i = 0
-    // AQE off for the Lloyd rounds (GraftSession.withoutAqe): each
-    // round's action is a <= k-row centroid collect.
-    graft.GraftSession.withoutAqe(spark) { while (i < iters) {
+    // AQE off for the Lloyd rounds, on a child session
+    // (GraftSession.withConf): each round's action is a <= k-row
+    // centroid collect, which re-planning can only add a job to.
+    graft.GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") { child =>
+    val rows = Bridge.ofRows(child, corpus)
+    while (i < iters) {
       // argmax cell id as an inline expression: struct(score, cid)
       // array_max — ties resolve to the highest cid, deterministically
       val scoreCols = cents.map { case (cid, c) =>
@@ -121,7 +125,7 @@ object Similarity {
           lit(cid).as("cid"))
       }
       val best = array_max(array(scoreCols.toIndexedSeq: _*)).getField("cid")
-      cents = corpus
+      cents = rows
         .groupBy(best.as("cid"))
         .agg(graft.functions.GraftFunctions
           .vecMomentsFp(col("embedding"), Fp, d, outer = false).as("_m"))

@@ -360,16 +360,12 @@ object EngineOps {
       ev.write.mode("overwrite").partitionBy("event_date").parquet(base)
     }
     val day = lit("2024-01-05").cast("date")
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      ev.filter(col("event_date") === day)
-        .withColumn("value", col("value") * 2)
-        .write.mode("overwrite").partitionBy("event_date").parquet(base)
-    } finally {
-      prev.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-    }
+    // a write option, not the session conf: it outranks the conf for
+    // this write only
+    ev.filter(col("event_date") === day)
+      .withColumn("value", col("value") * 2)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("event_date").parquet(base)
     spark.read.parquet(base)
       .groupBy(col("event_date"))
       .agg(count(lit(1)).as("n"),

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Each path's schema is inferred once: [[Formats.read]] memoizes it
   * (LRU, 256 entries) by (raw path incl. `#Sheet`, format, `splittable`,
-  * the session's SQL conf — so `caseSensitive`, `nanosAsLong` etc. never
+  * the session's SQL conf — so `caseSensitive`, `timestampType` etc. never
   * see a stale schema), valid while a driver-side `globStatus` of the
   * path, recursing into directories, yields the same sorted (file,
   * length, mtime) list. A hit passes `.schema(...)` to the reader, so

@@ -3,7 +3,6 @@ package graft.sql
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
-import graft.GraftSession
 import graft.catalog.Catalog
 import graft.sources.{Formats, Writers}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -40,7 +39,6 @@ class Engine(
     val catalogDir: String = sys.env.getOrElse("GRAFT_CATALOG_DIR", "/tmp/graft/catalog")) {
 
   val catalog = new Catalog(catalogDir)
-  GraftSession.tune(spark)
 
   /** Relative paths resolve against the data dir (reference:
     * src/data_source/context.rs:38-43).

@@ -141,7 +141,6 @@ object Events {
     * nanosecond handling as the batch loader (Tables.apply).
     */
   def stream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
     val rawSchema = spark.read.parquet(path).schema
     // the file-stream source monitors a DIRECTORY; stage the single

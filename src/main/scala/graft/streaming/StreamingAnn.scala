@@ -28,11 +28,10 @@ object StreamingAnn {
       k: Int = 5, batches: Int = 2): DataFrame = {
     val queries = corpus.filter(col("vec_id") < maxQuery)
       .select(col("vec_id"), col("embedding"))
-    val c = StreamingEvents.materializeStatic( // static side computed
-      corpus.select(col("vec_id").as("neighbor_id"), // once, not per trigger
-        col("embedding").as("_ce"), Similarity.l2norm(col("embedding")).as("_cn")))
-    val drained = StreamingEvents.drain(spark, queries, batches, "vec_id", "ann-topk") {
-      stream =>
+    val static = corpus.select(col("vec_id").as("neighbor_id"),
+      col("embedding").as("_ce"), Similarity.l2norm(col("embedding")).as("_cn"))
+    val drained = StreamingEvents.withStatic(static) { c => // computed once, not per trigger
+      StreamingEvents.drain(spark, queries, batches, "vec_id", "ann-topk") { stream =>
         val q = stream.select(col("vec_id").as("query_id"),
           col("embedding").as("_qe"), Similarity.l2norm(col("embedding")).as("_qn"))
         q.join(c, col("query_id") =!= col("neighbor_id"))
@@ -40,6 +39,7 @@ object StreamingAnn {
             Similarity.dot(col("_qe"), col("_ce")) / (col("_qn") * col("_cn")))
           .groupBy(col("query_id"))
           .agg(GraftFunctions.topKAgg(col("cosine"), col("neighbor_id"), k).as("_top"))
+      }
     }
     // rank expansion of the drained heaps (batch post-processing; the
     // streaming query's state was the aggregate above)

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.{Contamination, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Streaming corpus curation: the stateless quality gates (language ID
   * + the Gopher rule battery) applied to a document STREAM. Because
@@ -42,8 +41,10 @@ object StreamingCuration {
   /** Drive the streaming decontamination over the documents table in
     * `batches` micro-batches and return the drained result — must
     * equal the batch `contamination_check` under the same DuckDB
-    * oracle (the proof the op is safe to run at ingest). Mirrors
-    * [[StreamingDedup.runIncremental]]'s staging.
+    * oracle (the proof the op is safe to run at ingest). Stages and
+    * drains through [[StreamingEvents.drain]]: Complete mode, so the
+    * aggregate state (contaminated docs only) is re-emitted per batch
+    * and the drained table is the final counts.
     */
   def runDecontamination(
       spark: SparkSession,
@@ -51,40 +52,13 @@ object StreamingCuration {
       evalPred: org.apache.spark.sql.Column,
       k: Int = 5,
       batches: Int = 3): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-decontam-stream")
-    dir.toFile.deleteOnExit()
     val train = docs.filter(!evalPred).select(col("doc_id"), col("text"))
-    train.repartitionByRange(batches, col("doc_id"))
-      .write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream
-      .schema(train.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
-    val sinkName = s"graft_decontam_stream_${System.nanoTime()}"
-    // Complete mode: the aggregate state (contaminated docs only) is
-    // re-emitted per batch; the drained table is the final counts
     // the distinct eval-gram relation materializes ONCE per drain —
     // a stream-static broadcast join re-derives its static subplan
     // every micro-batch otherwise (3× the eval shingle pass)
-    val evalGrams = StreamingEvents.materializeStatic(
-      Contamination.evalGramRelation(docs.filter(evalPred), k))
-    // no timeouts/watermarks anywhere in this pipeline — skip the
-    // trailing no-data batch (see StreamingEvents.withoutNoDataBatches)
-    StreamingEvents.withoutNoDataBatches(spark, skip = true) {
-      StreamingEvents.withStreamingPartitions(spark) {
-        val q = Contamination.overlapAgainstGrams(stream, evalGrams, k)
-          .writeStream.format("memory").queryName(sinkName)
-          .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally if (q.isActive) q.stop()
-      }
+    StreamingEvents.withStatic(Contamination.evalGramRelation(docs.filter(evalPred), k)) { evalGrams =>
+      StreamingEvents.drain(spark, train, batches, "doc_id", "decontam-stream")(
+        Contamination.overlapAgainstGrams(_, evalGrams, k))
     }
-    // decouple the result from the memory sink and drop the temp view:
-    // repeated invocations in one session must not accumulate
-    // fully-materialized sink tables in driver memory
-    val drained = spark.table(sinkName).localCheckpoint()
-    spark.catalog.dropTempView(sinkName)
-    drained
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Incremental near-dup detection over a document stream (SURVEY.md
   * §8 / VERDICT round-1 item 8): the streaming counterpart of
@@ -49,41 +49,6 @@ object StreamingDedup {
       .write.mode("overwrite").parquet(dir.toString)
     try body(staged.schema, dir.toString)
     finally StreamingEvents.rmTree(dir)
-  }
-
-  /** Drain an APPEND-mode stream through a parquet FILE sink and hand
-    * back the landed relation — distributed end-to-end. The memory
-    * sink is a driver collect capped by spark.driver.maxResultSize,
-    * which a dup-saturated corpus's pair set can exceed (the 25×
-    * hot-key attribution stress measured exactly that failure); the
-    * file sink is also the production landing shape. The checkpoint
-    * dir is deleted after the drain; the sink dir backs the returned
-    * lazy relation, so [[StreamingEvents.SinkJanitor]]'s shutdown hook
-    * removes it at JVM exit (tmp dirs are NOT otherwise reclaimed).
-    */
-  private def drainToParquet(spark: SparkSession,
-      out: DataFrame, prefix: String, hasTimeouts: Boolean = false): DataFrame = {
-    val sinkDir = StreamingEvents.SinkJanitor.register(
-      java.nio.file.Files.createTempDirectory(s"$prefix-sink"))
-    val ckpt = java.nio.file.Files.createTempDirectory(s"$prefix-ckpt")
-    try {
-      // the trailing no-data batch exists to fire timeouts / advance
-      // watermarks — a NoTimeout changelog pipeline emits everything
-      // in data batches, so skip it (one state-store commit cycle per
-      // drain saved); TTL'd pipelines keep it
-      StreamingEvents.withoutNoDataBatches(spark, skip = !hasTimeouts) {
-        StreamingEvents.withStreamingPartitions(spark) {
-          val q = out.writeStream.format("parquet")
-            .option("path", sinkDir.toString)
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally if (q.isActive) q.stop()
-        }
-      }
-    } finally StreamingEvents.rmTree(ckpt)
-    spark.read.schema(out.schema).parquet(sinkDir.toString)
   }
 
   case class BucketState(ids: List[Long], saturated: Boolean = false)
@@ -172,26 +137,18 @@ object StreamingDedup {
   }
 
   /** Exact-Jaccard verification of a candidate-pair stream against the
-    * static document store (stream-static equi-joins by id — at scale
-    * this is the point lookup into the corpus table, touching only
-    * candidate rows).
+    * static document store's shingle sets `sh`
+    * ([[Dedup.shingleRelation]]; stream-static equi-joins by id — at
+    * scale this is the point lookup into the corpus table, touching
+    * only candidate rows).
     */
   def verifiedPairs(
-      spark: SparkSession,
       pairStream: Dataset[(Long, Long)],
-      staticDocs: DataFrame,
-      k: Int = 3,
-      threshold: Double = 0.8): DataFrame = {
-    // materialize the static verify relation ONCE per drain: a
-    // stream-static join re-evaluates its static subplan every
-    // micro-batch, so without this the full corpus shingle pass runs
-    // 2 joins × N batches times instead of once (strategy per
-    // spark.graft.stream.staticSide — see materializeStatic)
-    val sh = StreamingEvents.materializeStatic(Dedup.shingleRelation(staticDocs, k))
+      sh: DataFrame,
+      threshold: Double = 0.8): DataFrame =
     Dedup.verifyJaccardOnRel(pairStream.toDF("doc_a", "doc_b"), sh)
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
 
   /** Drive the full incremental pipeline over the documents table in
     * `batches` micro-batches and return the drained result — the
@@ -211,10 +168,16 @@ object StreamingDedup {
         .schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(dir)
-      drainToParquet(spark,
-        verifiedPairs(spark,
-          candidatePairs(spark, stream, stateTtl = stateTtl), docs, threshold = threshold),
-        "graft-dedup", hasTimeouts = stateTtl.isDefined)
+      // the static verify relation materializes ONCE per drain: a
+      // stream-static join re-evaluates its static subplan every
+      // micro-batch, so the full corpus shingle pass would run 2 joins
+      // × N batches times instead of once
+      StreamingEvents.withStatic(Dedup.shingleRelation(docs, 3)) { sh =>
+        // a TTL'd pipeline fires its timeouts in the no-data batch
+        StreamingEvents.drainToParquet(spark,
+          verifiedPairs(candidatePairs(spark, stream, stateTtl = stateTtl), sh, threshold),
+          "graft-dedup", StreamingEvents.drainConf(spark, skipNoDataBatch = stateTtl.isEmpty))
+      }
     }
 
   /** Per-bucket SIDE-TAGGED member state for the cross-side pair
@@ -291,28 +254,29 @@ object StreamingDedup {
         .option("maxFilesPerTrigger", "1")
         .parquet(dir)
       // both static relations materialize ONCE per drain (see
-      // verifiedPairs): the id side-tag join and the verify fetch-join
+      // runIncremental): the id side-tag join and the verify fetch-join
       // would otherwise re-scan/re-shingle the snapshots per batch
-      val oldIds = StreamingEvents.materializeStatic(
-        oldDocs.select(col("doc_id"), lit(true).as("_in_old")))
-      val sigs = Dedup.bandBuckets(stream, k, bands, rowsPerBand)
-        .select(col("band"), col("bucket"), col("doc_id"))
-        .join(oldIds, Seq("doc_id"), "left")
-        .select(col("band"), col("bucket"), col("doc_id"),
-          col("_in_old").isNull.as("is_added"))
-        .as[(Int, Long, Long, Boolean)]
-      val pairs = sigs
-        .groupByKey(r => (r._1, r._2))
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.NoTimeout())(emitCrossPairs(maxBucket))
-        .dropDuplicates("_1", "_2")
-      val newSh = StreamingEvents.materializeStatic(
-        Dedup.shingleRelation(newDocs, k))
-      val verified = Dedup.verifyJaccardOnRel(
-        pairs.toDF("doc_a", "doc_b"), newSh)
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a").as("retained_doc"), col("doc_b").as("added_doc"))
-      val drainedPairs = drainToParquet(spark, verified, "graft-delta")
+      val drainedPairs = StreamingEvents.withStatic(
+          oldDocs.select(col("doc_id"), lit(true).as("_in_old"))) { oldIds =>
+        StreamingEvents.withStatic(Dedup.shingleRelation(newDocs, k)) { newSh =>
+          val sigs = Dedup.bandBuckets(stream, k, bands, rowsPerBand)
+            .select(col("band"), col("bucket"), col("doc_id"))
+            .join(oldIds, Seq("doc_id"), "left")
+            .select(col("band"), col("bucket"), col("doc_id"),
+              col("_in_old").isNull.as("is_added"))
+            .as[(Int, Long, Long, Boolean)]
+          val pairs = sigs
+            .groupByKey(r => (r._1, r._2))
+            .flatMapGroupsWithState(OutputMode.Append(),
+              GroupStateTimeout.NoTimeout())(emitCrossPairs(maxBucket))
+            .dropDuplicates("_1", "_2")
+          val verified = Dedup.verifyJaccardOnRel(pairs.toDF("doc_a", "doc_b"), newSh)
+            .filter(col("jaccard") >= threshold)
+            .select(col("doc_a").as("retained_doc"), col("doc_b").as("added_doc"))
+          StreamingEvents.drainToParquet(spark, verified, "graft-delta",
+            StreamingEvents.drainConf(spark, skipNoDataBatch = true))
+        }
+      }
       // post-drain assembly over BOUNDED relations: statuses from the
       // digest classification, added_near_dup from the drained pairs
       graft.operators.Snapshot.assemble(

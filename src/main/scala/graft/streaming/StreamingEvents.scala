@@ -1,8 +1,10 @@
 package graft.streaming
 
+import graft.GraftSession
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.graftglue.Bridge
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryListener, Trigger}
 
 /** Incremental funnel + retention analytics over an event STREAM —
   * the stateful counterparts of [[Events.funnel]] / [[Events.retention]]
@@ -348,69 +350,46 @@ object StreamingEvents {
     }
   }
 
-  /** Run `body` (a streaming query start+drain) with
-    * `spark.sql.shuffle.partitions` temporarily lowered: every stateful
-    * streaming operator keeps one state store PER shuffle partition
-    * PER micro-batch version, so 32 partitions × a handful of stores ×
-    * triggers is pure checkpoint overhead at drain scale (the staged
-    * corpora are MBs). Results are partition-count-independent — only
-    * wall time changes. A production deployment sizes this to its
-    * actual key cardinality instead.
+  /** Confs a drain runs its query under, on a child session
+    * ([[graft.GraftSession.withConf]]).
+    *
+    * `spark.sql.shuffle.partitions` lowered to 4, never raised: every
+    * stateful streaming operator keeps one state store PER shuffle
+    * partition PER micro-batch version, so 32 partitions × a handful
+    * of stores × triggers is pure checkpoint overhead at drain scale
+    * (the staged corpora are MBs). Results are
+    * partition-count-independent — only wall time changes. A
+    * production deployment sizes this to its actual key cardinality
+    * instead.
+    *
+    * `skipNoDataBatch` turns `spark.sql.streaming.noDataMicroBatches
+    * .enabled` off. An AvailableNow drain whose pipeline arms NO
+    * timeouts gains nothing from the trailing zero-row micro-batch
+    * Spark otherwise appends (it exists to advance watermarks so
+    * timeouts fire and outer-join/append-mode aggregate results
+    * flush): inner-join matches and changelog emissions all happen in
+    * DATA batches, so the extra batch is one full state-store commit
+    * cycle of pure overhead per drain — measured 1.6 s (unsalted) to
+    * 9.5 s (salted, 16 partitions × 4 join stores) on the attribution
+    * drains at sf0.1. Drains that DO arm ProcessingTimeTimeout
+    * (stateTtl set) keep the caller's setting: their timeouts fire in
+    * no-data batches.
     */
-  private[streaming] def withStreamingPartitions[T](spark: SparkSession, n: Int = 4)(
-      body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    if (prev.toInt <= n) body
-    else {
-      spark.conf.set(key, n.toString)
-      try body finally spark.conf.set(key, prev)
-    }
+  private[streaming] def drainConf(spark: SparkSession, skipNoDataBatch: Boolean)
+      : Seq[(String, String)] = {
+    val parts = math.min(4, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    ("spark.sql.shuffle.partitions" -> parts.toString) +:
+      Option.when(skipNoDataBatch)(noDataBatchesOff).toSeq
   }
+  private val noDataBatchesOff = "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
 
-  /** Run `body` with `spark.sql.streaming.noDataMicroBatches.enabled`
-    * off, restoring the previous value after. An AvailableNow drain
-    * whose pipeline arms NO timeouts gains nothing from the trailing
-    * zero-row micro-batch Spark otherwise appends (it exists to
-    * advance watermarks so timeouts fire and outer-join/append-mode
-    * aggregate results flush): inner-join matches and changelog
-    * emissions all happen in DATA batches, so the extra batch is one
-    * full state-store commit cycle of pure overhead per drain —
-    * measured 1.6 s (unsalted) to 9.5 s (salted, 16 partitions × 4
-    * join stores) on the attribution drains at sf0.1. Drains that DO
-    * arm ProcessingTimeTimeout (stateTtl set) keep the default: their
-    * timeouts fire in no-data batches.
-    */
-  private[streaming] def withoutNoDataBatches[T](spark: SparkSession, skip: Boolean)(
-      body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    if (!skip) body
-    else {
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, "false")
-      try body finally spark.conf.set(key, prev)
-    }
-  }
-
-  /** Exact-set variant for drains that need MORE partitions than the
-    * session default (a salted skew drain's fan-out is pointless if
-    * every salted sub-key hashes back onto the same few partitions).
-    */
-  private[streaming] def withExactStreamingPartitions[T](spark: SparkSession, n: Int)(
-      body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    if (prev.toInt == n) body
-    else {
-      spark.conf.set(key, n.toString)
-      try body finally spark.conf.set(key, prev)
-    }
-  }
-
-  /** Materialize a stream-static join's STATIC side once per drain —
-    * without this the static subplan re-evaluates every micro-batch
-    * (measured: the corpus shingle pass ran 2 joins × 3 batches = 6
-    * times per dedup drain). Strategy is `spark.graft.stream.staticSide`:
+  /** Run `body` (a drain) against `df`'s STATIC side materialized
+    * once — without this the static subplan of a stream-static join
+    * re-evaluates every micro-batch (measured: the corpus shingle pass
+    * ran 2 joins × 3 batches = 6 times per dedup drain) — and release
+    * it when `body` returns, so the drain's query must have terminated
+    * by then and its result must not read the static side. Strategy
+    * is `spark.graft.stream.staticSide`:
     *
     *  - `localCheckpoint` (default): cheapest — but lineage is
     *    truncated and the blocks are UNREPLICATED, so on an executor
@@ -418,13 +397,13 @@ object StreamingEvents {
     *    for local mode and the gate; wrong under dynamic allocation.
     *  - `persist`: MEMORY_AND_DISK_2 (2 replicas, eagerly built) —
     *    survives a single executor loss; lineage kept, so even a double
-    *    loss recomputes instead of failing. The cluster deploy choice.
+    *    loss recomputes instead of failing. The cluster deploy choice;
+    *    the cache entry is dropped after `body`.
     *  - `checkpoint`: reliable checkpoint to the sc checkpoint dir
     *    (must be set; shared FS) — survives any loss, costs a write.
     */
-  private[graft] def materializeStatic(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    df.sparkSession.conf
+  private[streaming] def withStatic[T](df: DataFrame)(body: DataFrame => T): T = {
+    val static = df.sparkSession.conf
       .getOption("spark.graft.stream.staticSide")
       .getOrElse("localCheckpoint") match {
       case "localCheckpoint" => df.localCheckpoint()
@@ -437,6 +416,8 @@ object StreamingEvents {
         s"spark.graft.stream.staticSide: unknown strategy '$other' " +
           "(expected localCheckpoint | persist | checkpoint)")
     }
+    try body(static) finally static.unpersist()
+  }
 
   /** Stage `prepared` as `batches` parquet files, stream them one per
     * trigger through `pipeline`, drain, decouple, return.
@@ -468,12 +449,12 @@ object StreamingEvents {
     // forever. Drain such pipelines by watching cumulative source input
     // rows and stopping once every staged row is committed.
     val staged = if (selfTerminating) -1L else spark.read.parquet(dir.toString).count()
-    val stream = spark.readStream
-      .schema(prepared.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
     val sinkName = s"graft_${sinkPrefix.replace('-', '_')}_${System.nanoTime()}"
-    withStreamingPartitions(spark) {
+    val drained = GraftSession.withConf(spark, drainConf(spark, skipNoDataBatch = selfTerminating): _*) { child =>
+      val stream = child.readStream
+        .schema(prepared.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(dir.toString)
       // recentProgress is a bounded ring the empty-batch spin would
       // overwrite — accumulate input rows in a listener instead. The
       // listener registers BEFORE start() and matches on the sink/query
@@ -482,41 +463,40 @@ object StreamingEvents {
       // progress events, leaving `consumed` permanently short of
       // `staged` and spinning the drain into its 30-minute deadline.
       val consumed = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
+      if (!selfTerminating) child.streams.addListener(new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
           if (e.progress.name == sinkName) consumed.addAndGet(e.progress.numInputRows)
-      }
-      if (!selfTerminating) spark.streams.addListener(listener)
-      try withoutNoDataBatches(spark, skip = selfTerminating) {
-        val q = pipeline(stream)
-          .writeStream.format("memory").queryName(sinkName)
-          .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
-          .start()
-        try {
-          if (selfTerminating) q.awaitTermination()
-          else {
-            try {
-              val deadline = System.nanoTime() + 30L * 60 * 1000000000L
-              while (q.isActive && consumed.get() < staged && System.nanoTime() < deadline)
-                Thread.sleep(100)
-              if (consumed.get() < staged)
-                throw new IllegalStateException(
-                  s"drain($sinkPrefix): ${consumed.get()}/$staged rows after deadline")
-            } finally {
-              q.stop()
-              q.awaitTermination()
-            }
+      })
+      val q = pipeline(stream)
+        .writeStream.format("memory").queryName(sinkName)
+        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow())
+        .start()
+      try {
+        if (selfTerminating) q.awaitTermination()
+        else {
+          try {
+            val deadline = System.nanoTime() + 30L * 60 * 1000000000L
+            while (q.isActive && consumed.get() < staged && System.nanoTime() < deadline)
+              Thread.sleep(100)
+            if (consumed.get() < staged)
+              throw new IllegalStateException(
+                s"drain($sinkPrefix): ${consumed.get()}/$staged rows after deadline")
+          } finally {
+            q.stop()
+            q.awaitTermination()
           }
-        } finally if (q.isActive) q.stop()
-      } finally if (!selfTerminating) spark.streams.removeListener(listener)
+        }
+      } finally {
+        if (q.isActive) q.stop()
+        Bridge.releaseQuery(q)
+      }
+      // the caller gets a local checkpoint of the sink table, in its own
+      // session; dropping the view frees the sink's rows
+      try Bridge.ofRows(spark, child.table(sinkName)).localCheckpoint()
+      finally child.catalog.dropTempView(sinkName)
     }
-    val drained = spark.table(sinkName).localCheckpoint()
-    spark.catalog.dropTempView(sinkName)
     rmTree(dir)
     drained
   }
@@ -661,17 +641,7 @@ object StreamingEvents {
     // sink's driver collect). The parquet sink keeps the drain
     // distributed — which is also the production landing shape — and
     // the returned relation reads it lazily.
-    val sinkDir = SinkJanitor.register(
-      java.nio.file.Files.createTempDirectory("graft-attr-sink"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-attr-ckpt")
-    // state-store provider is read at query START — set/restore around
-    // the drain only (RocksDB keeps buffered join state off-heap and
-    // incrementally checkpointed: the measured winner once state
-    // outgrows the HDFS provider's per-batch in-memory version map)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    if (rocksDbState) spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    //
     // partition width follows the skew plan: an unsalted drain keeps
     // the tiny-state default (4 — state-store commit overhead dominates
     // at gate SFs), but a SALTED drain exists precisely because one
@@ -687,34 +657,51 @@ object StreamingEvents {
     // cardinality/core budget.
     val drainParts = spark.conf.getOption("spark.graft.stream.drainPartitions")
       .map(_.toInt).getOrElse(if (nSalts > 1) math.min(32, 4 * nSalts) else 4)
-    try {
-      // skip the trailing no-data batch: the inner interval join emits
-      // every match in the DATA batch where it completes; the empty
-      // batch only evicts state we are about to discard with the
-      // checkpoint (its cost scales with partitions × join stores —
-      // the salted drain paid up to 9.5 s for it at sf0.1)
-      withoutNoDataBatches(spark, skip = true) {
-        withExactStreamingPartitions(spark, drainParts) {
-          val q = joined.writeStream.format("parquet")
-            .option("path", sinkDir.toString)
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally if (q.isActive) q.stop()
-        }
+    // skip the trailing no-data batch: the inner interval join emits
+    // every match in the DATA batch where it completes; the empty
+    // batch only evicts state we are about to discard with the
+    // checkpoint (its cost scales with partitions × join stores — the
+    // salted drain paid up to 9.5 s for it at sf0.1). The state-store
+    // provider is read at query START (RocksDB keeps buffered join
+    // state off-heap and incrementally checkpointed: the measured
+    // winner once state outgrows the HDFS provider's per-batch
+    // in-memory version map).
+    val overrides = Seq("spark.sql.shuffle.partitions" -> drainParts.toString, noDataBatchesOff) ++
+      Option.when(rocksDbState)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try drainToParquet(spark, joined, "graft-attr", overrides)
+    finally rmTree(dir)
+  }
+
+  /** Drain an APPEND-mode stream to the end of its input through a
+    * parquet FILE sink, on a child session with `overrides`, and hand
+    * back the landed relation — distributed end-to-end. The memory
+    * sink is a driver collect capped by spark.driver.maxResultSize,
+    * which a dup-saturated corpus's pair set or a hot key's join
+    * output can exceed; the file sink is also the production landing
+    * shape. The checkpoint dir is deleted after the drain; the sink
+    * dir backs the returned lazy relation, so [[SinkJanitor]]'s
+    * shutdown hook removes it at JVM exit (tmp dirs are NOT otherwise
+    * reclaimed).
+    */
+  private[streaming] def drainToParquet(spark: SparkSession, out: DataFrame, prefix: String,
+      overrides: Seq[(String, String)]): DataFrame = {
+    val sinkDir = SinkJanitor.register(
+      java.nio.file.Files.createTempDirectory(s"$prefix-sink"))
+    val ckpt = java.nio.file.Files.createTempDirectory(s"$prefix-ckpt")
+    try GraftSession.withConf(spark, overrides: _*) { child =>
+      val q = Bridge.ofRows(child, out).writeStream.format("parquet")
+        .option("path", sinkDir.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode(OutputMode.Append()).trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination()
+      finally {
+        if (q.isActive) q.stop()
+        Bridge.releaseQuery(q)
       }
-    } finally {
-      if (rocksDbState) prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-      // staging + checkpoint are drained state, deleted now; the sink
-      // dir backs the returned lazy relation, so the SinkJanitor
-      // shutdown hook removes it at JVM exit instead
-      rmTree(dir); rmTree(ckpt)
-    }
-    spark.read.schema(joined.schema).parquet(sinkDir.toString)
+    } finally rmTree(ckpt)
+    spark.read.schema(out.schema).parquet(sinkDir.toString)
   }
 
   /** Drive the incremental funnel over the events table in `batches`

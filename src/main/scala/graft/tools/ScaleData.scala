@@ -59,9 +59,10 @@ object ScaleData {
            |            / sqrt($dims) as float))""".stripMargin))
 
   /** `n` user events over a 31-day span: deterministic hash-based
-    * user/type/value assignment, `ts` written as int64 NANOS (the
-    * driver testdata's physical type — Tables reads both through the
-    * same nanosAsLong path).
+    * user/type/value assignment, `ts` written as plain int64 nanos —
+    * the type older driver testdata's TIMESTAMP(NANOS) reads as under
+    * `nanosAsLong`, so [[graft.Tables.normalizeEventTs]] handles both
+    * alike.
     */
   def events(spark: SparkSession, n: Long, nUsers: Int = 2000): DataFrame = {
     val spanNs = 31L * 24 * 3600 * 1000000000L
@@ -81,13 +82,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val (outDir, nDocs, nVecs) = (args(0), args(1).toLong, args(2).toLong)
     val nEvents = if (args.length > 3) args(3).toLong else nDocs * 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     documents(spark, nDocs).repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     embeddings(spark, nVecs).repartition(32)

@@ -2,8 +2,9 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 
 import graft.streaming.StreamingEvents
 
@@ -26,16 +27,19 @@ object StreamingStress {
 
   /** Max over progress events of Σ state rows / bytes across the
     * query's stateful operators, plus the number of progress events
-    * (micro-batches) observed since the last reset.
+    * (micro-batches) observed since the last reset. A context-wide
+    * listener: each drain starts its query on its own child session.
     */
-  private final class PeakStateListener extends StreamingQueryListener {
+  private final class PeakStateListener extends SparkListener {
     val maxRows = new AtomicLong
     val maxBytes = new AtomicLong
     val batches = new AtomicLong
     def reset(): Unit = { maxRows.set(0); maxBytes.set(0); batches.set(0) }
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+    override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
+      case e: QueryProgressEvent => record(e)
+      case _ =>
+    }
+    private def record(e: QueryProgressEvent): Unit = {
       val so = e.progress.stateOperators
       var r = 0L; var b = 0L
       var i = 0
@@ -49,38 +53,29 @@ object StreamingStress {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val outJson = if (args.length > 1) args(1) else "bench/streaming_stress_last.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    graft.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val listener = new PeakStateListener
-    spark.streams.addListener(listener)
+    spark.sparkContext.addSparkListener(listener)
 
-    def events: DataFrame = graft.Tables(spark, dir, "events")
+    def events(s: SparkSession): DataFrame = graft.Tables(s, dir, "events")
     val ttl = Some("7 days")
 
-    // (name, variant, thunk). Attribution/window/sliding have no TTL
+    // (name, variant, drain). Attribution/window/sliding have no TTL
     // knob: state is bounded by watermarks / open windows by design.
-    val runs: Seq[(String, String, () => DataFrame)] = Seq(
-      ("evt_window_stream", "plain", () => StreamingEvents.runWindowAgg(spark, events)),
-      ("evt_sliding_stream", "plain", () => StreamingEvents.runSlidingAgg(spark, events)),
-      ("evt_attribution_stream", "plain", () => StreamingEvents.runAttribution(spark, events)),
-      ("evt_sessionize_stream", "plain", () => StreamingEvents.runSessionize(spark, events)),
-      ("evt_sessionize_stream", "ttl", () => StreamingEvents.runSessionize(spark, events, stateTtl = ttl)),
-      ("evt_paths_stream", "plain", () => StreamingEvents.runPaths(spark, events)),
-      ("evt_paths_stream", "ttl", () => StreamingEvents.runPaths(spark, events, stateTtl = ttl)),
-      ("evt_funnel_stream", "plain", () => StreamingEvents.runFunnel(spark, events)),
-      ("evt_funnel_stream", "ttl", () => StreamingEvents.runFunnel(spark, events, stateTtl = ttl)),
-      ("evt_retention_stream", "plain", () => StreamingEvents.runRetention(spark, events)),
-      ("evt_retention_stream", "ttl", () => StreamingEvents.runRetention(spark, events, stateTtl = ttl)),
-      ("evt_anomaly_stream", "plain", () => StreamingEvents.runAnomaly(spark, events)),
-      ("evt_anomaly_stream", "ttl", () => StreamingEvents.runAnomaly(spark, events, stateTtl = ttl)))
+    val runs: Seq[(String, String, SparkSession => DataFrame)] = Seq(
+      ("evt_window_stream", "plain", s => StreamingEvents.runWindowAgg(s, events(s))),
+      ("evt_sliding_stream", "plain", s => StreamingEvents.runSlidingAgg(s, events(s))),
+      ("evt_attribution_stream", "plain", s => StreamingEvents.runAttribution(s, events(s))),
+      ("evt_sessionize_stream", "plain", s => StreamingEvents.runSessionize(s, events(s))),
+      ("evt_sessionize_stream", "ttl", s => StreamingEvents.runSessionize(s, events(s), stateTtl = ttl)),
+      ("evt_paths_stream", "plain", s => StreamingEvents.runPaths(s, events(s))),
+      ("evt_paths_stream", "ttl", s => StreamingEvents.runPaths(s, events(s), stateTtl = ttl)),
+      ("evt_funnel_stream", "plain", s => StreamingEvents.runFunnel(s, events(s))),
+      ("evt_funnel_stream", "ttl", s => StreamingEvents.runFunnel(s, events(s), stateTtl = ttl)),
+      ("evt_retention_stream", "plain", s => StreamingEvents.runRetention(s, events(s))),
+      ("evt_retention_stream", "ttl", s => StreamingEvents.runRetention(s, events(s), stateTtl = ttl)),
+      ("evt_anomaly_stream", "plain", s => StreamingEvents.runAnomaly(s, events(s))),
+      ("evt_anomaly_stream", "ttl", s => StreamingEvents.runAnomaly(s, events(s), stateTtl = ttl)))
 
     // Both state-store backends: the default in-memory/HDFS provider
     // AND RocksDB — the backend a 100 TB deployment actually runs
@@ -92,29 +87,27 @@ object StreamingStress {
 
     val out = new StringBuilder("[")
     var first = true
-    providers.foreach { case (provName, provClass) =>
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", provClass)
-      runs.foreach { case (name, variant, mk) =>
-        System.gc()
-        listener.reset()
-        val t0 = System.nanoTime()
-        val res =
-          try { val n = mk().count(); Right(n) }
-          catch { case e: Throwable => Left(e.getMessage) }
-        val wall = (System.nanoTime() - t0) / 1e9
-        // progress events arrive async; give the bus a moment
-        org.apache.spark.graftglue.CoreBridge.waitListenerBus(spark.sparkContext)
-        val line = res match {
-          case Right(n) =>
-            f"""{"query":"$name","variant":"$variant","provider":"$provName","wall_s":$wall%.2f,"rows":$n,"batches":${listener.batches.get()},"peak_state_rows":${listener.maxRows.get()},"peak_state_bytes":${listener.maxBytes.get()}}"""
-          case Left(msg) =>
-            s"""{"query":"$name","variant":"$variant","provider":"$provName","error":${"\"" + msg.replace("\"", "'").take(120) + "\""}}"""
-        }
-        println(s"[stress] $line")
-        if (!first) out.append(",\n") else first = false
-        out.append(line)
-        spark.catalog.clearCache()
+    for ((provName, provClass) <- providers; (name, variant, mk) <- runs) {
+      System.gc()
+      listener.reset()
+      val t0 = System.nanoTime()
+      val res =
+        try Right(graft.GraftSession.withConf(spark,
+          "spark.sql.streaming.stateStore.providerClass" -> provClass)(mk(_).count()))
+        catch { case e: Throwable => Left(e.getMessage) }
+      val wall = (System.nanoTime() - t0) / 1e9
+      // progress events arrive async; give the bus a moment
+      org.apache.spark.graftglue.CoreBridge.waitListenerBus(spark.sparkContext)
+      val line = res match {
+        case Right(n) =>
+          f"""{"query":"$name","variant":"$variant","provider":"$provName","wall_s":$wall%.2f,"rows":$n,"batches":${listener.batches.get()},"peak_state_rows":${listener.maxRows.get()},"peak_state_bytes":${listener.maxBytes.get()}}"""
+        case Left(msg) =>
+          s"""{"query":"$name","variant":"$variant","provider":"$provName","error":${"\"" + msg.replace("\"", "'").take(120) + "\""}}"""
       }
+      println(s"[stress] $line")
+      if (!first) out.append(",\n") else first = false
+      out.append(line)
+      spark.catalog.clearCache()
     }
     out.append("]")
     try {

@@ -141,7 +141,11 @@ class StreamingDedupSpec extends AnyFunSuite {
     try {
       for (mode <- Seq("persist", "checkpoint")) {
         spark.conf.set(key, mode)
+        val pinned = spark.sparkContext.getPersistentRDDs.size
         assert(drained() == base, s"staticSide=$mode diverged from default")
+        // the drain releases the static side it materialized
+        if (mode == "persist") assert(spark.sparkContext.getPersistentRDDs.size <= pinned,
+          s"persistent RDDs after a persist drain: ${spark.sparkContext.getPersistentRDDs.size}, before: $pinned")
       }
       spark.conf.set(key, "bogus")
       intercept[IllegalArgumentException](drained())
