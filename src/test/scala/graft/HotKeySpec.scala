@@ -12,6 +12,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * that spec does; results are asserted identical with the
   * optimization on and off.
   *
+  * The shuffle width is pinned at 32 next to those thresholds.
+  * OptimizeSkewedJoin splits a partition only when it exceeds
+  * `skewedPartitionFactor` x the median partition size, and a key
+  * carrying share h of the rows over N hash partitions gives
+  * hot / median = 1 + N*h/(1-h). At factor 2 a split needs
+  * N > (1-h)/h: N > 4 for this spec's h = 0.2. The session's default
+  * width follows the host's cores, so without the pin a 4-core host
+  * sits exactly at the factor and never splits.
+  *
   * Two shapes, because they exercise the two AQE skew regimes:
   *  - attribution's interval join emits the raw pair relation with no
   *    downstream partitioning demand, so OptimizeSkewedJoin fires in
@@ -56,7 +65,8 @@ class HotKeySpec extends AnyFunSuite {
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes",
     "spark.sql.adaptive.forceOptimizeSkewedJoin",
-    "spark.sql.adaptive.enabled")
+    "spark.sql.adaptive.enabled",
+    "spark.sql.shuffle.partitions")
 
   private def withSkewScale(force: Boolean)(body: => Unit): Unit = {
     val keep = skewConfs.map(k => k -> spark.conf.getOption(k)).toMap
@@ -65,6 +75,7 @@ class HotKeySpec extends AnyFunSuite {
       spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16k")
       spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
       spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+      spark.conf.set("spark.sql.shuffle.partitions", "32")
       spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", force.toString)
       body
     } finally keep.foreach {

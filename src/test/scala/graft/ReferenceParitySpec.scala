@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.sql.Engine
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,10 +19,18 @@ class ReferenceParitySpec extends AnyFunSuite {
 
   private val exampleDir = "/root/reference/example"
 
+  /** Cancels, not fails, a test that reads the example CSVs where the
+    * reference checkout is absent; it runs wherever the checkout is.
+    */
+  private def assumeExamples(): Unit =
+    assume(Files.isDirectory(Paths.get(exampleDir)),
+      s"reference example CSVs not found at $exampleDir")
+
   private def eng() = new Engine(spark, dataDir = "/root/reference",
     catalogDir = Files.createTempDirectory("graft-ref-cat").toString)
 
   test("glob direct-path over the reference's order*.csv merges both files") {
+    assumeExamples()
     val res = eng().execute(s"select * from '$exampleDir/order*.csv' order by id")
     assert(res.header == Seq("id", "user_id", "product_name"))
     // order_1.csv + order_2.csv row counts
@@ -33,6 +41,7 @@ class ReferenceParitySpec extends AnyFunSuite {
   }
 
   test("reference DDL + join flow: create table then inner join") {
+    assumeExamples()
     val e = eng()
     e.execute("create table user () location 'example/user.csv'")
     e.execute(s"create table orders () location 'example/order_1.csv'")

@@ -95,17 +95,24 @@ class ScaleOpsSpec extends AnyFunSuite {
     // the adaptive FINAL plan must contain the skew-split SMJ (the
     // runtime re-plan that replaces hand-salting at 100 TB; the
     // explicit salted-join fallback is the spec above).
+    // The shuffle width is pinned at 32: a partition splits only above
+    // factor x the median, and a key with share h over N partitions
+    // gives hot / median = 1 + N*h/(1-h), so at factor 2 a split needs
+    // N > (1-h)/h, i.e. N > 9 for h = 0.1. The session's default width
+    // follows the host's cores (1.44 x the median at N = 4).
     val keep = Seq(
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.shuffle.partitions")
       .map(k => k -> spark.conf.getOption(k)).toMap
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256k")
       spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
       spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
+      spark.conf.set("spark.sql.shuffle.partitions", "32")
       // high-entropy payload: shuffle blocks are lz4-compressed, so a
       // constant pad would compress below the skew thresholds
       def pay(c: org.apache.spark.sql.Column) = concat(
